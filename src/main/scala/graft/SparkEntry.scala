@@ -2886,7 +2886,7 @@ object SparkEntry {
   /** q123's oracle: the classifier's computed types from the closed
     * form (the q80 chain, stimulus column only), the single-cell set
     * via a RECURSIVE closure over the same literal edge table the
-    * engine broadcasts, and the three-branch action verdict. */
+    * engine closes on the driver, and the three-branch action verdict. */
   private def singleCellTypeSql: String = {
     val edges = graft.operators.Traces.StimulusEdges
       .map { case (c, p) => s"('$c', '$p')" }.mkString(", ")

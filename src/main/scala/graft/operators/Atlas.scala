@@ -144,22 +144,14 @@ object Atlas {
     * reference's list starts at the node itself). Built on the q29
     * closure; dimension-sized, broadcast by callers. */
   def geoAncestors(region: DataFrame, nation: DataFrame): DataFrame = {
-    // DRIVER-SIDE closure over the collected edge list (30 edges): same
-    // UNION-ALL frontier expansion as Ontology.transitiveClosure at
-    // maxDepth 3, plus the depth-0 self rows — but as a local relation,
-    // so the many broadcasts that consume it (q94/q94b judge twice per
-    // verdict column, q95 twice more) stop re-deriving the closure from
-    // the two parquet dimensions per use.
+    // DRIVER-SIDE closure over the collected edge list (30 edges) at
+    // maxDepth 3, plus the depth-0 self rows — a local relation, so the
+    // many broadcasts that consume it (q94/q94b judge twice per verdict
+    // column, q95 twice more) stop re-deriving the closure from the two
+    // parquet dimensions per use.
     val spark = region.sparkSession
     val edges = collectEdges(region, nation)
-    val parentsOf = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    var frontier = edges.map { case (c, p) => (c, p, 1) }
-    var closure = frontier
-    for (_ <- 2 to 3) {
-      frontier = frontier.flatMap { case (n, a, d) =>
-        parentsOf.getOrElse(a, Nil).map(p => (n, p, d + 1)) }
-      closure = closure ++ frontier
-    }
+    val closure = Ontology.closurePaths(edges, maxDepth = 3)
     val selfRows = (edges.map(_._1) ++ edges.map(_._2)).distinct.map(n => (n, n, 0))
     spark.createDataFrame(
       (closure ++ selfRows).map { case (n, a, d) => org.apache.spark.sql.Row(n, a, d) }

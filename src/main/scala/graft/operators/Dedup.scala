@@ -1435,7 +1435,14 @@ object Dedup {
     * join) and every aggregate past the restriction runs on
     * leak-sized rows; the corpus pays ONE row-local window scan and
     * never exchanges on the window key (the q113 discipline — the
-    * restriction happens BEFORE anything corpus-sized moves). */
+    * restriction happens BEFORE anything corpus-sized moves).
+    *
+    * NOTE (r20 semantics): CONSTRUCTION executes Spark jobs — the
+    * benchmark-side window set is localCheckpoint'ed when this frame is
+    * built, so building it (an explain, a plan audit) pays the
+    * tokenize+window+distinct pass up front, pins a lineage-free
+    * snapshot in executor storage, and snapshots source state at build
+    * time. */
   def leakAttribution(docs: DataFrame, windowTokens: Int = 8): DataFrame = {
     val w = windowTokens
     require(w >= 1, s"windowTokens must be >= 1, got $w")

@@ -67,7 +67,7 @@ object MergeWriter {
     // not the configured default filesystem.
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
-    val merged = mergedState(spark.read.parquet(path), updates, key, deleteFlag)
+    val merged = mergedState(graft.Tables.parquet(spark, path), updates, key, deleteFlag)
     val staging = new org.apache.hadoop.fs.Path(path + ".staging")
     val backup = new org.apache.hadoop.fs.Path(path + ".bak")
     merged.write.mode("overwrite").parquet(staging.toString)
@@ -105,7 +105,7 @@ object MergeWriter {
     require(!touched.contains(null),
       s"applyToPartitioned: updates carry a NULL $partCol — null partitions are not mergeable")
     if (touched.nonEmpty) {
-      val target = spark.read.parquet(path).filter(col(partCol).isin(touched: _*))
+      val target = graft.Tables.parquet(spark, path).filter(col(partCol).isin(touched: _*))
       val merged0 = mergedState(target, updates, key, deleteFlag)
       // Deletes can empty a touched partition, and dynamic overwrite
       // would then leave its old files alive — that path must LIST the
@@ -219,7 +219,7 @@ object Upsert {
     val dir = graft.Scratch.dir("graft_merge_") + "/state"
     target(customer).write.mode("overwrite").parquet(dir)
     MergeWriter.applyTo(spark, dir, updates(orders, supplier), "c_custkey", Some("is_deleted"))
-    spark.read.parquet(dir).orderBy("c_custkey")
+    graft.Tables.parquet(spark, dir).orderBy("c_custkey")
   }
 
   /** q43b's update batch: zero out every overdrawn customer (deeply
@@ -251,7 +251,7 @@ object Upsert {
       .write.mode("overwrite").partitionBy("segment").parquet(dir)
     MergeWriter.applyToPartitioned(spark, dir, partitionedUpdates(customer, supplier),
       "c_custkey", "segment", Some("is_deleted"))
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .select("c_custkey", "segment", "acctbal_cents")
       .orderBy("c_custkey")
   }

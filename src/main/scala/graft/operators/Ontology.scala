@@ -71,4 +71,25 @@ object Ontology {
     transitiveClosure(edges, maxDepth)
       .filter(col("ancestor") === root)
       .select(col("node"), col("depth"))
+
+  /** [[transitiveClosure]] on the driver, for an edge list that is
+    * already there (a literal ontology, or a collected dimension-sized
+    * one): the same (node, ancestor, depth) paths with the same UNION
+    * ALL multiplicity, by the same frontier expansion. A consumer then
+    * tests membership against a constant set or joins a local
+    * relation, instead of carrying maxDepth broadcast joins in its
+    * plan. */
+  def closurePaths(edges: Seq[(String, String)], maxDepth: Int = 10)
+      : Seq[(String, String, Int)] = {
+    val parentsOf = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    Iterator.iterate(edges.map { case (c, p) => (c, p, 1) }) { frontier =>
+      frontier.flatMap { case (n, a, d) => parentsOf.getOrElse(a, Nil).map(p => (n, p, d + 1)) }
+    }.take(maxDepth).flatten.toSeq
+  }
+
+  /** [[descendantsOf]] on the driver: the (node, depth) rows of
+    * [[closurePaths]] under `root`. */
+  def localDescendantsOf(edges: Seq[(String, String)], root: String, maxDepth: Int = 10)
+      : Seq[(String, Int)] =
+    closurePaths(edges, maxDepth).collect { case (n, a, d) if a == root => (n, d) }
 }

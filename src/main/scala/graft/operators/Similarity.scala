@@ -887,7 +887,7 @@ object Similarity {
         reverse(col("embedding")).as("embedding"))
     MergeWriter.applyToPartitioned(spark, dir,
       pqResidualEncodeWithModel(delta, cents, books, m, dim), "vec_id", "cell")
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
         col("pq_code"), col("err_bp"))
       .orderBy("vec_id")

@@ -52,15 +52,15 @@ import org.apache.spark.sql.types.LongType
   * is the classify core's bounded partial_collect_set buffer, q123's
   * own inventoried shape, a few short strings per trace —
   * TracePipelineSpec);
-  * row-local check metrics, one sweeps explode, the dimension-sized
-  * ontology closure BROADCASTS (the only broadcast — never data-
-  * sized), two AQE-splittable trace-keyed equi-joins (verdict gate,
-  * store rev lookup), one map-side-combined per-trace aggregate, no
-  * window. Unlike q141's annotation store, the trace store is keyed by
-  * the entity itself (a fix job updates existing resources and never
-  * creates), so the merge is a pure per-key update; at 100 TB the
-  * store merge takes the q43b partitioned-writer path — the flat swap
-  * here keeps the inventory entry self-contained.
+  * row-local check metrics, one sweeps explode, the literal ontology
+  * closed on the driver into one membership test, two AQE-splittable
+  * trace-keyed equi-joins (verdict gate, store rev lookup), one
+  * map-side-combined per-trace aggregate, no window. Unlike q141's
+  * annotation store, the trace store is keyed by the entity itself (a
+  * fix job updates existing resources and never creates), so the merge
+  * is a pure per-key update; at 100 TB the store merge takes the q43b
+  * partitioned-writer path — the flat swap here keeps the inventory
+  * entry self-contained.
   */
 object TracePipeline {
 
@@ -156,10 +156,10 @@ object TracePipeline {
     val storeDir = s"$base/store"
     Traces.traceReport(documents).write.mode("overwrite").parquet(reportDir)
     existingStore(documents).write.mode("overwrite").parquet(storeDir)
-    val report = spark.read.parquet(reportDir)
-    val updates = pushUpdates(report, spark.read.parquet(storeDir))
+    val report = graft.Tables.parquet(spark, reportDir)
+    val updates = pushUpdates(report, graft.Tables.parquet(spark, storeDir))
     MergeWriter.applyTo(spark, storeDir, updates, "trace_id")
-    spark.read.parquet(storeDir)
+    graft.Tables.parquet(spark, storeDir)
       .select("trace_id", "types", "single_cell_stimuli", "rev")
       .orderBy("trace_id")
   }

@@ -345,9 +345,9 @@ object Traces {
     *
     * Scale shape: content classification rides the ONE row-local
     * decode scan (q80's machinery — a deployment reads the persisted
-    * [[traceReport]] frame instead of re-decoding); the ontology
-    * closure is dimension-sized and BROADCASTS; one map-side-combined
-    * trace-keyed aggregate ends the plan. */
+    * [[traceReport]] frame instead of re-decoding); the literal
+    * ontology closes on the driver into one membership test; one
+    * map-side-combined trace-keyed aggregate ends the plan. */
   def singleCellTypeFix(documents: DataFrame): DataFrame =
     singleCellClassify(
       sweepConsistencyRowLocal(documents).select("trace_id", "computed"))
@@ -361,19 +361,16 @@ object Traces {
     * cannot drift (the q140/q141 shared-diff discipline). Unsorted —
     * callers order. */
   def singleCellClassify(computedSweeps: DataFrame): DataFrame = {
-    val spark = computedSweeps.sparkSession
-    import spark.implicits._
-    val edges = StimulusEdges.toDF("child", "parent")
-    val singleCell = Ontology.descendantsOf(edges, SingleCellRoot)
-      .select(col("node")).distinct()
+    // the literal ontology closes on the driver: membership is one isin
+    // over the closed set, not a lazy closure joined against every sweep
+    val singleCell = Ontology.localDescendantsOf(StimulusEdges, SingleCellRoot)
+      .map(_._1).distinct
+    val hit = col("computed").isin(singleCell: _*)
     computedSweeps
-      .join(broadcast(singleCell.withColumn("__sc", lit(1))),
-        col("computed") === col("node"), "left")
       .groupBy(col("trace_id"))
       .agg(
-        count(col("__sc")).as("n_single_cell_sweeps"),
-        array_join(array_sort(collect_set(
-          when(col("__sc").isNotNull, col("computed")))), ",")
+        count(when(hit, lit(1))).as("n_single_cell_sweeps"),
+        array_join(array_sort(collect_set(when(hit, col("computed")))), ",")
           .as("single_cell_stimuli"))
       .withColumn("already_typed", alreadyTyped(col("trace_id")))
       .withColumn("action",

@@ -431,8 +431,8 @@ object DocStreams {
                      queries: Seq[(Int, Seq[String])] = graft.operators.Search.Queries,
                      k: Int = graft.operators.Search.SearchTopK): DataFrame =
     graft.operators.Search.indexedSearch(
-      spark.read.parquet(indexPath).drop("seg"),
-      spark.read.parquet(metaPath).agg(sum("n_docs").as("n_docs")),
+      graft.Tables.parquet(spark, indexPath).drop("seg"),
+      graft.Tables.parquet(spark, metaPath).agg(sum("n_docs").as("n_docs")),
       queries, k)
 
   /** Ingest-time PERCOLATION — standing queries evaluated against

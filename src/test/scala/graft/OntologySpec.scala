@@ -9,23 +9,31 @@ class OntologySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("transitive closure finds all ancestor paths with depths") {
-    val edges = Seq(
-      ("leaf1", "mid"), ("leaf2", "mid"), ("mid", "root")
-    ).toDF("child", "parent")
-    val out = Ontology.transitiveClosure(edges).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
-    assert(out == Set(
+    val edges = Seq(("leaf1", "mid"), ("leaf2", "mid"), ("mid", "root"))
+    val out = Ontology.transitiveClosure(edges.toDF("child", "parent")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted
+    assert(out.toSet == Set(
       ("leaf1", "mid", 1), ("leaf2", "mid", 1), ("mid", "root", 1),
       ("leaf1", "root", 2), ("leaf2", "root", 2)))
+    assert(Ontology.closurePaths(edges).sorted == out, "driver closure drifted")
   }
 
   test("descendantsOf returns the subclass tree of a root") {
-    val edges = Seq(
-      ("a", "stim"), ("b", "stim"), ("c", "a"), ("x", "other")
-    ).toDF("child", "parent")
-    val out = Ontology.descendantsOf(edges, "stim").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(out == Set(("a", 1), ("b", 1), ("c", 2)))
+    val edges = Seq(("a", "stim"), ("b", "stim"), ("c", "a"), ("x", "other"))
+    val out = Ontology.descendantsOf(edges.toDF("child", "parent"), "stim").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+    assert(out.toSet == Set(("a", 1), ("b", 1), ("c", 2)))
+    assert(Ontology.localDescendantsOf(edges, "stim").sorted == out, "driver closure drifted")
+  }
+
+  test("driver closure keeps UNION ALL multiplicity and the depth bound on a DAG") {
+    // d reaches top two ways; a cycle is cut at maxDepth like the lazy plan
+    val edges = Seq(("d", "b"), ("d", "c"), ("b", "top"), ("c", "top"), ("x", "y"), ("y", "x"))
+    Seq(3, 10).foreach { depth =>
+      val lazyRows = Ontology.transitiveClosure(edges.toDF("child", "parent"), depth).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted
+      assert(Ontology.closurePaths(edges, depth).sorted == lazyRows, s"maxDepth $depth")
+    }
   }
 
   test("vec_dot is available via SQL through GraftExtensions-style registration") {

@@ -161,9 +161,14 @@ class TracesSpec extends AnyFunSuite {
     val out = Traces.singleCellTypeFix(docs).collect()
     assert(out.length == docs.count(), "one verdict per trace")
     // recompute membership from the q80 view through the closure by hand
-    val closure = graft.operators.Ontology.descendantsOf(
+    val reference = graft.operators.Ontology.descendantsOf(
         Traces.StimulusEdges.toDF("child", "parent"), Traces.SingleCellRoot)
-      .select("node").collect().map(_.getString(0)).toSet
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+    // the classifier closes the literal on the driver: same rows, same
+    // multiplicity as the lazy closure
+    assert(graft.operators.Ontology.localDescendantsOf(
+      Traces.StimulusEdges, Traces.SingleCellRoot).sorted == reference)
+    val closure = reference.map(_._1).toSet
     assert(closure == Set("current_injection", "step", "ramp"),
       s"the 2-level ontology must close transitively: $closure")
     val byTrace = Traces.sweepConsistency(docs).collect()
